@@ -3,9 +3,13 @@ plans that pass. Checked via the executed/optimized plan text."""
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from xmlschema_spark import compile_plan
+from xmlschema_spark.operators.dedup import (hamming_near_dups,
+                                             lsh_bucket_pairs,
+                                             simhash_near_dups)
 from xmlschema_spark.operators.identity import keyref_violations
 from xmlschema_spark.operators.row_checks import row_violations
 from xmlschema_spark.queries import LINEITEM_SPEC
@@ -202,3 +206,32 @@ def test_drift_multi_column_two_scans(spark, sf_dir):
     read_cols = {c.split("#")[0] for s in scans for c in s.split(",") if c}
     assert read_cols == {"l_orderkey", "l_quantity", "l_discount",
                          "l_extendedprice"}, read_cols
+
+
+@pytest.mark.parametrize("near_dups", ["lsh", "simhash", "hamming"])
+def test_banded_near_dups_single_bucket_shuffle(spark, near_dups):
+    """Every banded near-dup path shares one physical plan: ONE bucket
+    shuffle (the window cap reuses the groupBy's hash partitioning) plus
+    the final distinct, the hot-bucket cap as a WindowGroupLimit before
+    collect_list, and never an all-pairs Join."""
+    texts = spark.createDataFrame(
+        [(str(i), f"x y z w {i % 3}") for i in range(50)],
+        "doc_id string, text string")
+    if near_dups == "lsh":
+        out = lsh_bucket_pairs(texts, "text", "doc_id")
+        want = {"id_a": "string", "id_b": "string"}
+    elif near_dups == "simhash":
+        out = simhash_near_dups(texts, "text", "doc_id")
+        want = {"id_a": "string", "id_b": "string", "hamming": "int"}
+    else:
+        hashes = (spark.range(500)
+                  .select(F.col("id").cast("string").alias("doc"),
+                          (F.col("id") * 2654435761).cast("long").alias("h")))
+        out = hamming_near_dups(hashes, "h", "doc")
+        want = {"id_a": "string", "id_b": "string", "hamming": "bigint"}
+    p = _plan(out)
+    assert p.count("Exchange") == 2, p
+    assert "WindowGroupLimit" in p, p
+    assert "Join" not in p, p
+    assert {f.name: f.dataType.simpleString()
+            for f in out.schema.fields} == want

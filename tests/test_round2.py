@@ -12,10 +12,6 @@ from xmlschema_spark.operators.row_checks import row_violations
 from xmlschema_spark.specs import ColumnSpec, TableSpec, UniqueSpec
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 # --------------------------------------------------------------- dedup fixes
 
 def test_exact_dedup_keeps_null_text_rows(spark):
@@ -43,15 +39,6 @@ def test_lsh_hot_bucket_capped_and_bounded(spark):
     assert len(got) == 16 * 15 // 2
     members = {r.id_a for r in got} | {r.id_b for r in got}
     assert members == {f"d{i:04d}" for i in range(16)}   # deterministic
-
-
-def test_lsh_pairs_single_shuffle_before_pairs(spark):
-    """The window cap must REUSE the groupBy's hash partitioning: exactly
-    2 Exchanges in the whole plan (bucket shuffle + final distinct)."""
-    df = spark.createDataFrame([("a", "x y z w"), ("b", "x y z w")],
-                               "doc_id string, text string")
-    p = _plan(lsh_bucket_pairs(df, "text", "doc_id"))
-    assert p.count("Exchange") == 2, p
 
 
 def test_simhash_capped_and_exact_pairs(spark):

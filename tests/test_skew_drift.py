@@ -1,4 +1,4 @@
-"""F4 skew fixture (salted aggregation correctness under a hot key) and
+"""F4 skew fixture (unique aggregate correctness under a hot key) and
 F5 drift fixture (KL detects the shifted column, not the stable one)."""
 
 import pytest
@@ -7,17 +7,18 @@ from pyspark.sql import functions as F
 from xmlschema_spark.operators.drift import drift_report, quantile_sketch
 from xmlschema_spark.operators.identity import unique_violations
 from xmlschema_spark.sources.fixtures import make_images
-from xmlschema_spark.specs import UniqueSpec
+from xmlschema_spark.specs import TableSpec, UniqueSpec
 
 
 def test_salted_unique_correct_under_skew(spark):
-    """30% of rows share one phash (F4). The salted two-level aggregate
-    must produce the same violation set as a straight groupBy."""
+    """30% of rows share one phash (F4). The partial+final count
+    aggregate must produce the same violation set as a straight
+    groupBy."""
     df = make_images(spark, 5000, dirty=False, skew_phash=True,
                      with_bytes=False).cache()
     hot = df.groupBy("phash").count().where(F.col("count") > 1).collect()
     hot_sizes = {r.phash: r["count"] for r in hot}
-    out = unique_violations(df, UniqueSpec("phash", ["phash"], salt=32),
+    out = unique_violations(df, UniqueSpec("phash", ["phash"]),
                             "image_id").collect()
     # every row in a hot group flagged, carrying the exact group size
     assert len(out) == sum(hot_sizes.values())
@@ -26,15 +27,22 @@ def test_salted_unique_correct_under_skew(spark):
     df.unpersist()
 
 
-def test_skewed_vs_unskewed_same_plan_shape(spark):
-    """Salting must not change results for uniform keys either."""
+def test_legacy_salt_key_loads_and_is_ignored(spark):
+    """Spec JSON written before UniqueSpec.salt was removed still loads:
+    the "salt" key is dropped and the violations equal the spec's
+    without it."""
     df = make_images(spark, 2000, dirty=True, with_bytes=False)
-    a = unique_violations(df, UniqueSpec("phash", ["phash"], salt=64),
-                          "image_id")
-    b = unique_violations(df, UniqueSpec("phash", ["phash"], salt=2),
-                          "image_id")
-    assert sorted((r.row_key, r.occurs) for r in a.collect()) == \
-           sorted((r.row_key, r.occurs) for r in b.collect())
+    base = {"name": "images", "key_column": "image_id"}
+    legacy = TableSpec.from_dict({**base, "uniques": [
+        {"name": "phash", "columns": ["phash"], "salt": 64}]})
+    plain = TableSpec.from_dict({**base, "uniques": [
+        {"name": "phash", "columns": ["phash"]}]})
+    assert legacy == plain
+    a, b = (unique_violations(df, s.uniques[0], "image_id")
+            for s in (legacy, plain))
+    got = sorted((r.row_key, r.occurs) for r in a.collect())
+    assert got
+    assert got == sorted((r.row_key, r.occurs) for r in b.collect())
 
 
 def test_drift_report_detects_shift(spark):

@@ -6,6 +6,10 @@ value hash (columns sorted by name).
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
        python tools/check_oracle.py [sf_dir] --emit CORRECTNESS_local_r5.json
 
+Named queries restrict the run (and the OK count and the emitted
+"total") to those queries; an unknown name is an error (exit 2) before
+anything runs.
+
 With --emit <path>, writes a CORRECTNESS-shaped JSON artifact (one
 entry per query: rows/schema/hash match flags) so the in-repo gate is
 visible even when the driver's snapshot lags HEAD (round-4 VERDICT
@@ -50,10 +54,18 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query name(s): {', '.join(unknown)}")
+        return 2
+    if only:
+        qs = {name: fn for name, fn in qs.items() if name in only}
+
     import duckdb
     from pyspark.sql import SparkSession
-
-    import __spark_entry__ as entrymod
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -71,13 +83,10 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"create view {t} as select * from read_parquet('{p}')")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     fails = []
     report: dict[str, dict] = {}
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         try:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()

@@ -6,10 +6,11 @@ Scale notes (the whole point of these shapes):
   parallelism, never shuffle-order 'first'). NULL-text rows are kept
   unconditionally (no content to compare; a naive equi-join on the
   fingerprint would silently DROP them — null keys never match).
-- MinHash LSH: signatures computed in the scan projection (JVM HOFs);
-  the band -> bucket-join turns an O(n^2) all-pairs problem into
-  per-bucket candidate pairs. Buckets of size 1 are dropped BEFORE the
-  self-join so the shuffle carries only colliding docs.
+- banded blocking (MinHash LSH, SimHash, 64-bit Hamming): one shared
+  core (_banded_pairs) turns an O(n^2) all-pairs problem into
+  per-bucket candidate pairs generated inside each collected bucket.
+  Buckets of size 1 are dropped BEFORE pair generation, and no path
+  ever self-joins.
 - hot buckets are bounded BEFORE materialization: a row_number() window
   cap keeps only the lexicographically-first max_bucket members per
   bucket, so a degenerate bucket (boilerplate spam at 100 TB) never
@@ -44,10 +45,11 @@ def exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         .select(id_col, "fp", "group_n")
 
 
-# per-task shingle digest cache bound (entries): each entry holds
-# n_hashes 16-byte digests (~100 B with dict overhead), so 1<<20
-# entries is ~100 MB/worker worst case
-_MINHASH_SH_CACHE_MAX = 1 << 20
+# per-task shingle digest cache bound (entries): an entry (the shingle
+# key plus a tuple of n_hashes=4 16-byte md5 digests, with dict
+# overhead) measures ~380 B under tracemalloc, so 1<<18 entries is
+# ~100 MB/worker worst case
+_MINHASH_SH_CACHE_MAX = 1 << 18
 
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
@@ -131,6 +133,66 @@ def _cap_buckets(df: DataFrame, keys: list[str], order_col,
             .where(F.col("_rn") <= max_bucket).drop("_rn"))
 
 
+def _banded_pairs(blocks: DataFrame, max_bucket: int,
+                  verify: str | None = None) -> DataFrame:
+    """The shared banded-blocking core: ordered (id_a < id_b) candidate
+    pairs from `(doc, band, key[, sh])` block rows, one row per pair per
+    shared bucket (callers dedupe).
+
+    ONE shuffle: window-cap each (band, key) bucket to its
+    lexicographically-first max_bucket docs, then collect the member
+    list per bucket on the same partitioning; singleton buckets (the
+    vast majority) die in the HAVING before any pair generation. Pairs
+    are generated INSIDE the sorted array — no self-join, no quadratic
+    hot-key blowup. With `verify` (a SQL expression over members `a`
+    and `b`, each a `(doc, sh)` struct) every pair also carries
+    `hamming` = that expression."""
+    capped = _cap_buckets(blocks, ["band", "key"], "doc", max_bucket)
+    if verify is None:
+        member, a, b, extra = F.col("doc"), "a", "b", ""
+    else:
+        member, a, b = F.struct("doc", "sh"), "a.doc", "b.doc"
+        extra = f", {verify} AS hamming"
+    grouped = (capped.groupBy("band", "key")
+               .agg(F.array_sort(F.collect_list(member)).alias("ms"),
+                    F.count(F.lit(1)).alias("bn"))
+               .where(F.col("bn") > 1))
+    pairs_arr = F.expr(
+        "flatten(transform(ms, (a, i) -> "
+        "transform(slice(ms, i + 2, size(ms)), b -> struct("
+        f"{a} AS id_a, {b} AS id_b{extra}))))")
+    return grouped.select(F.explode(pairs_arr).alias("p")).select("p.*")
+
+
+def _hamming_pairs(h: DataFrame, n_bits: int, bands: int,
+                   max_hamming: int, max_bucket: int) -> DataFrame:
+    """Distinct (id_a, id_b, hamming) pairs within max_hamming over an
+    n_bits hash `sh` of h(doc, sh): block on `bands` equal bit slices,
+    verify exactly with bit_count(xor).
+
+    Recall guarantee (pigeonhole): a pair within Hamming distance d
+    shares at least one of the `bands` slices iff d <= bands-1; beyond
+    that the blocking is best-effort (pairs differing in every band are
+    missed) and this warns."""
+    if n_bits % bands:
+        raise ValueError(f"bands must divide {n_bits}")
+    if max_hamming >= bands:
+        import warnings
+        warnings.warn(
+            f"{n_bits}-bit banding guarantees recall only for hamming <= "
+            f"{bands - 1}; pairs at distance {bands}..{max_hamming} "
+            "that differ in all bands will be missed", stacklevel=3)
+    width = n_bits // bands
+    keys = [F.struct(F.lit(b).alias("band"),
+                     F.shiftrightunsigned(F.col("sh"), b * width)
+                      .bitwiseAND(F.lit((1 << width) - 1)).alias("key"))
+            for b in range(bands)]
+    blocks = h.select("doc", "sh", F.inline(F.array(*keys)))
+    return (_banded_pairs(blocks, max_bucket, "bit_count(a.sh ^ b.sh)")
+            .where(F.col("hamming") <= max_hamming)
+            .distinct())
+
+
 def lsh_bucket_pairs(df: DataFrame, text_col: str, id_col: str,
                      n_hashes: int = 4, band_size: int = 2,
                      max_bucket: int = 64) -> DataFrame:
@@ -143,34 +205,16 @@ def lsh_bucket_pairs(df: DataFrame, text_col: str, id_col: str,
     the cap is applied by a pre-aggregation window so the aggregation
     buffer itself is bounded (a post-collect slice() would OOM first)."""
     sigs = minhash_signatures(df, text_col, id_col, n_hashes)
-    n_bands = n_hashes // band_size
-    # one scan: per doc, an array of (band, bucket) structs -> explode.
-    # Signatures are computed exactly once per document.
-    band_structs = []
-    for b in range(n_bands):
-        cols = [f"h{b * band_size + j}" for j in range(band_size)]
-        band_structs.append(F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws("|", *cols)).alias("bucket")))
-    bands = (sigs.select(F.col(id_col).alias("doc"),
-                         F.explode(F.array(*band_structs)).alias("bb"))
-             .select("doc", "bb.band", "bb.bucket"))
-    # ONE shuffle: window-cap then collect member list per bucket;
-    # singleton buckets (the vast majority) die in the HAVING before any
-    # pair generation.
-    capped = _cap_buckets(bands, ["band", "bucket"], "doc", max_bucket)
-    grouped = (capped.groupBy("band", "bucket")
-               .agg(F.array_sort(F.collect_list("doc")).alias("docs"),
-                    F.count(F.lit(1)).alias("bn"))
-               .where(F.col("bn") > 1))
-    # ordered pairs generated INSIDE the array — no self-join:
-    # flatten(transform(docs, (a,i) -> transform(slice(docs, i+2, n), b -> (a,b))))
-    pairs_arr = F.expr(
-        "flatten(transform(docs, (a, i) -> "
-        "transform(slice(docs, i + 2, size(docs)), b -> struct(a AS id_a, b AS id_b))))")
-    return (grouped.select(F.explode(pairs_arr).alias("p"))
-            .select(F.col("p.id_a"), F.col("p.id_b"))
-            .distinct())
+    # one (band, md5 of the band's signature slice) key per band, from
+    # one scan: signatures are computed exactly once per document
+    keys = [F.struct(F.lit(b).alias("band"),
+                     F.md5(F.concat_ws("|", *[f"h{b * band_size + j}"
+                                              for j in range(band_size)]))
+                     .alias("key"))
+            for b in range(n_hashes // band_size)]
+    blocks = sigs.select(F.col(id_col).alias("doc"),
+                         F.inline(F.array(*keys)))
+    return _banded_pairs(blocks, max_bucket).distinct()
 
 
 def ngram_jaccard(df: DataFrame, text_col: str, id_col: str,
@@ -197,57 +241,20 @@ def simhash_near_dups(df: DataFrame, text_col: str, id_col: str,
                       max_bucket: int = 64) -> DataFrame:
     """SimHash near-dup pairs over the portable 48-bit simhash: block on
     the four 12-bit bands, then verify Hamming distance exactly via
-    bit_count(xor) inside each block.
-
-    Recall guarantee (pigeonhole): a pair within Hamming distance d
-    shares at least one of the 4 bands iff d <= 3; this is exact for the
-    default max_hamming=3. For max_hamming in 4..7 the blocking is
-    best-effort (pairs differing in all 4 bands are missed) — callers
-    wanting guaranteed recall at larger d must raise the band count.
-
-    Hot bands are capped with the same pre-aggregation window as the
-    MinHash path (bounded before materialization; deterministic
-    lexicographic survivors), and pairs are generated inside the
-    collected array — no self-join, no quadratic hot-key blowup.
+    bit_count(xor) inside each block (_hamming_pairs). Blocking is
+    exact for the default max_hamming=3 and best-effort (with a
+    warning) beyond.
 
     The hash derivation uses the Arrow-vectorized simhash48_fast
     (bitwise-identical to the simhash48 HOF fold — see
     text._simhash_fast_frame); at 10^9 documents the per-row Catalyst
     expression overhead of 48 array-filter folds would dominate the
     banding itself."""
-    if max_hamming >= SIMHASH_BANDS:
-        import warnings
-        warnings.warn(
-            f"simhash banding guarantees recall only for hamming <= "
-            f"{SIMHASH_BANDS - 1}; pairs at distance {SIMHASH_BANDS}.."
-            f"{max_hamming} that differ in all bands will be missed",
-            stacklevel=2)
     sh = simhash48_fast(
         df.select(F.col(id_col).alias("doc"), text_col),
         text_col, "doc").withColumnRenamed("sh48", "sh")
-    band_structs = [
-        F.struct(F.lit(b).alias("band"),
-                 F.shiftrightunsigned(F.col("sh"), b * 12)
-                  .bitwiseAND(F.lit(0xFFF)).alias("key"))
-        for b in range(SIMHASH_BANDS)]
-    blocks = (sh.select("doc", "sh",
-                        F.explode(F.array(*band_structs)).alias("bb"))
-              .select("doc", "sh", "bb.band", "bb.key"))
-    capped = _cap_buckets(blocks, ["band", "key"], "doc", max_bucket)
-    grouped = (capped.groupBy("band", "key")
-               .agg(F.array_sort(F.collect_list(F.struct("doc", "sh")))
-                    .alias("ms"),
-                    F.count(F.lit(1)).alias("bn"))
-               .where(F.col("bn") > 1))
-    pairs_arr = F.expr(
-        "flatten(transform(ms, (a, i) -> "
-        "transform(slice(ms, i + 2, size(ms)), b -> struct("
-        "a.doc AS id_a, b.doc AS id_b, "
-        "bit_count(a.sh ^ b.sh) AS hamming))))")
-    return (grouped.select(F.explode(pairs_arr).alias("p"))
-            .select("p.id_a", "p.id_b", "p.hamming")
-            .where(F.col("hamming") <= max_hamming)
-            .distinct())
+    return _hamming_pairs(sh, SIMHASH_BITS, SIMHASH_BANDS, max_hamming,
+                          max_bucket)
 
 
 def hamming_near_dups(df: DataFrame, hash_col: str, id_col: str,
@@ -259,52 +266,32 @@ def hamming_near_dups(df: DataFrame, hash_col: str, id_col: str,
     SimHash). Signedness is irrelevant: banding and the verify operate
     on the raw bit pattern.
 
-    Recall guarantee (pigeonhole): a pair within Hamming distance d
-    shares at least one of the `bands` equal slices iff d <= bands-1,
-    so blocking is EXACT for max_hamming <= bands-1 (default 8 bands
-    of 8 bits -> exact through distance 7); beyond that it is
-    best-effort and warns.
-
-    Physical shape = simhash_near_dups (the 100 TB path): ONE shuffle
-    (explode the bands, bucket groupBy), deterministic hot-bucket cap
-    BEFORE materialization, in-bucket pair generation, exact
-    bit_count(xor) verify — never an all-pairs join."""
-    if 64 % bands:
-        raise ValueError("bands must divide 64")
-    width = 64 // bands
-    mask = (1 << width) - 1
-    if max_hamming >= bands:
-        import warnings
-        warnings.warn(
-            f"hamming banding guarantees recall only for hamming <= "
-            f"{bands - 1}; pairs at distance {bands}..{max_hamming} "
-            "that differ in all bands will be missed", stacklevel=2)
+    `bands` must divide 64; blocking is EXACT for max_hamming <=
+    bands-1 (default 8 bands of 8 bits -> exact through distance 7),
+    best-effort with a warning beyond. Physical shape = every banded
+    path here (the 100 TB path): ONE bucket shuffle, deterministic
+    hot-bucket cap BEFORE materialization, in-bucket pair generation,
+    exact bit_count(xor) verify — never an all-pairs join."""
     h = df.select(F.col(id_col).alias("doc"),
                   F.col(hash_col).cast("long").alias("sh"))
-    band_structs = [
-        F.struct(F.lit(b).alias("band"),
-                 F.shiftrightunsigned(F.col("sh"), b * width)
-                  .bitwiseAND(F.lit(mask)).alias("key"))
-        for b in range(bands)]
-    blocks = (h.select("doc", "sh",
-                       F.explode(F.array(*band_structs)).alias("bb"))
-              .select("doc", "sh", "bb.band", "bb.key"))
-    capped = _cap_buckets(blocks, ["band", "key"], "doc", max_bucket)
-    grouped = (capped.groupBy("band", "key")
-               .agg(F.array_sort(F.collect_list(F.struct("doc", "sh")))
-                    .alias("ms"),
-                    F.count(F.lit(1)).alias("bn"))
-               .where(F.col("bn") > 1))
-    pairs_arr = F.expr(
-        "flatten(transform(ms, (a, i) -> "
-        "transform(slice(ms, i + 2, size(ms)), b -> struct("
-        "a.doc AS id_a, b.doc AS id_b, "
-        "bit_count(a.sh ^ b.sh) AS hamming))))")
-    return (grouped.select(F.explode(pairs_arr).alias("p"))
-            .select("p.id_a", "p.id_b",
-                    F.col("p.hamming").cast("long").alias("hamming"))
-            .where(F.col("hamming") <= max_hamming)
-            .distinct())
+    return (_hamming_pairs(h, 64, bands, max_hamming, max_bucket)
+            .withColumn("hamming", F.col("hamming").cast("long")))
+
+
+def _min_id_keepers(df: DataFrame, text_col: str,
+                    id_col: str) -> tuple[DataFrame, DataFrame]:
+    """(keepers, nulls), both carrying the text fingerprint `_fp`:
+    the min-id row per non-NULL fingerprint (one window pass), and
+    every NULL-text row. NULL-fp rows bypass the window entirely: they
+    are all keepers anyway, and hashing every null to ONE window
+    partition would make a large null-text fraction a single-task sort
+    hot spot."""
+    fp = df.withColumn("_fp", fingerprint(F.col(text_col)))
+    w = Window.partitionBy("_fp").orderBy(id_col)
+    keepers = (fp.where(F.col("_fp").isNotNull())
+               .withColumn("_rn", F.row_number().over(w))
+               .where(F.col("_rn") == 1).drop("_rn"))
+    return keepers, fp.where(F.col("_fp").isNull())
 
 
 def deduplicate(df: DataFrame, text_col: str, id_col: str,
@@ -329,17 +316,8 @@ def deduplicate(df: DataFrame, text_col: str, id_col: str,
     closure).
     """
     if method == "exact":
-        fp = df.withColumn("_fp", fingerprint(F.col(text_col)))
-        # NULL-fp rows bypass the window entirely: they are all keepers
-        # anyway, and hashing every null to ONE window partition would
-        # make a large null-text fraction a single-task sort hot spot
-        nulls = fp.where(F.col("_fp").isNull()).drop("_fp")
-        w = Window.partitionBy("_fp").orderBy(id_col)
-        keepers = (fp.where(F.col("_fp").isNotNull())
-                   .withColumn("_rn", F.row_number().over(w))
-                   .where(F.col("_rn") == 1)
-                   .drop("_fp", "_rn"))
-        return keepers.unionByName(nulls)
+        keepers, nulls = _min_id_keepers(df, text_col, id_col)
+        return keepers.drop("_fp").unionByName(nulls.drop("_fp"))
     if method == "minhash":
         pairs = lsh_bucket_pairs(df, text_col, id_col, n_hashes=4,
                                  band_size=2)
@@ -350,6 +328,16 @@ def deduplicate(df: DataFrame, text_col: str, id_col: str,
         losers = dups.select(F.col("id_b").alias(id_col)).distinct()
         return df.join(losers, on=id_col, how="left_anti")
     raise ValueError(f"unknown dedup method {method!r}")
+
+
+def _checkpointer(spark, checkpoint_dir: str | None):
+    """Eager DAG-truncating checkpoint for iterative plans:
+    localCheckpoint when checkpoint_dir is None, else a reliable
+    .checkpoint() into checkpoint_dir (see dup_clusters)."""
+    if checkpoint_dir is None:
+        return lambda frame: frame.localCheckpoint(eager=True)
+    spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    return lambda frame: frame.checkpoint(eager=True)
 
 
 def dup_clusters_star(pairs: DataFrame, max_iters: int = 30,
@@ -373,14 +361,7 @@ def dup_clusters_star(pairs: DataFrame, max_iters: int = 30,
     (member, cluster=component min), deterministic at any parallelism.
     Checkpointing semantics identical to dup_clusters (localCheckpoint
     by default, reliable checkpoint() with `checkpoint_dir`)."""
-    spark = pairs.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(frame: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return frame.checkpoint(eager=True)
-        return frame.localCheckpoint(eager=True)
+    _ckpt = _checkpointer(pairs.sparkSession, checkpoint_dir)
 
     def _star(E: DataFrame, large: bool) -> DataFrame:
         # m(u) = min over N(u) + {u}; E holds both orientations so
@@ -490,14 +471,7 @@ def dup_clusters(pairs: DataFrame, max_iters: int = 20,
 
     Deterministic: min over ids at any parallelism; no shuffle-order
     dependence."""
-    spark = pairs.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(frame: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return frame.checkpoint(eager=True)
-        return frame.localCheckpoint(eager=True)
+    _ckpt = _checkpointer(pairs.sparkSession, checkpoint_dir)
 
     edges = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     edges = edges.unionByName(
@@ -679,12 +653,7 @@ def incremental_deduplicate(df: DataFrame, text_col: str, id_col: str,
                          f"{run_id!r}")
     if store_buckets is not None and run_id is None:
         raise ValueError("store_buckets requires run_id")
-    fp = df.withColumn("_fp", fingerprint(F.col(text_col)))
-    nulls = fp.where(F.col("_fp").isNull())
-    w = Window.partitionBy("_fp").orderBy(id_col)
-    keepers = (fp.where(F.col("_fp").isNotNull())
-               .withColumn("_rn", F.row_number().over(w))
-               .where(F.col("_rn") == 1).drop("_rn"))
+    keepers, nulls = _min_id_keepers(df, text_col, id_col)
     from pyspark.errors import AnalysisException
 
     if store_buckets is not None:

@@ -101,13 +101,6 @@ def _expected_id_index(image_id: str) -> Optional[int]:
     return None
 
 
-def default_expected_pixels(image_id: str, w: int, h: int):
-    i = _expected_id_index(image_id)
-    if i is None:
-        return None
-    return fakecodec.gen_pixels(i, w, h)
-
-
 def _binary_views(arr):
     """(offsets int64 ndarray, data memoryview, isnull bool ndarray) for a
     pyarrow Binary/LargeBinary array — zero-copy row access."""

@@ -71,12 +71,6 @@ def stopword_ratio(col: Column, lang: str = "en") -> Column:
     return F.when(n > 0, stopword_count(col, lang) / n).otherwise(0.0)
 
 
-def mean_token_len(col: Column) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(0.0)
-
-
 def quality_score(col: Column, lang: str = "en") -> Column:
     """Composite quality in [0,1]: length band + low punctuation +
     stopword presence (heuristics in the C4/Gopher tradition)."""
@@ -234,8 +228,10 @@ def simhash64_pair(col: Column) -> Column:
 
 
 # per-task unique-token digest cache bound (tokens): 1<<20 entries of
-# n_bits uint8 bit-rows is 64 MB/worker at 64 bits — sized so a reused
-# worker keeps a full corpus vocabulary without unbounded growth
+# n_bits uint8 bit-rows is 64 MB/worker at 64 bits, plus ~130 B per
+# token for the tok_idx dict (tracemalloc), ~200 MB/worker in all —
+# sized so a reused worker keeps a full corpus vocabulary without
+# unbounded growth
 _SIMHASH_TOK_CACHE_MAX = 1 << 20
 
 

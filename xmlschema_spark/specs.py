@@ -143,16 +143,11 @@ class UniqueSpec:
     is_key=True additionally requires non-null fields
     ("missing key field", identities.py:523-531); unique silently skips
     all-null tuples (elements.py:914-918).
-    salt: retained for API compatibility; ignored since r8 — the
-    count aggregate's map-side partial combine already bounds reducer
-    skew (one partial row per tuple per map task), so the former
-    salted two-level shape only added an Exchange.
     """
 
     name: str
     columns: list[str] = field(default_factory=list)
     is_key: bool = False
-    salt: Optional[int] = None
     # selector-addressed identity over REPEATED content
     # (FieldValueSelector inside repeated elements, identities.py:
     # 461-544): dotted path of a record-array column whose exploded
@@ -570,7 +565,11 @@ class TableSpec:
             simple_types={
                 n: col({"name": n, **t})
                 for n, t in d.get("simple_types", {}).items()},
-            uniques=[UniqueSpec(**u) for u in d.get("uniques", [])],
+            # older spec JSON may carry "salt", a removed skew option
+            # that was already ignored: accept and drop it
+            uniques=[UniqueSpec(**{k: v for k, v in u.items()
+                                   if k != "salt"})
+                     for u in d.get("uniques", [])],
             keyrefs=[KeyrefSpec(**k) for k in d.get("keyrefs", [])],
             asserts=[AssertSpec(**a) for a in d.get("asserts", [])],
             occurs=[OccursSpec(**o) for o in d.get("occurs", [])],
