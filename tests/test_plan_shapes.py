@@ -235,3 +235,54 @@ def test_banded_near_dups_single_bucket_shuffle(spark, near_dups):
     assert "Join" not in p, p
     assert {f.name: f.dataType.simpleString()
             for f in out.schema.fields} == want
+
+
+def test_fan_out_adds_no_repartition_when_stats_fill_the_cores(spark):
+    """queries._fan_out leaves a scan alone once its size statistic
+    covers defaultParallelism x maxPartitionBytes; below that it adds
+    one round-robin repartition to the core count."""
+    from xmlschema_spark.queries import _fan_out
+    df = spark.range(1000)
+    size = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+    target = spark.sparkContext.defaultParallelism
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(size // target))
+        assert _fan_out(df) is df
+        spark.conf.set(key, str(size // target + 1))
+        fanned = _fan_out(df)
+        assert "RoundRobinPartitioning" in _plan(fanned)
+        assert fanned.rdd.getNumPartitions() == target
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_fan_out_falls_back_to_partition_count_without_stats(spark):
+    """When the _jdf size-statistics call raises, _fan_out decides by
+    df.rdd.getNumPartitions() against defaultParallelism instead."""
+    from xmlschema_spark.queries import _fan_out
+    target = spark.sparkContext.defaultParallelism
+
+    class NoStats:
+        def __init__(self, df):
+            self.df, self.sparkSession, self.rdd_calls = df, df.sparkSession, 0
+
+        @property
+        def _jdf(self):
+            raise RuntimeError("size statistics unavailable")
+
+        @property
+        def rdd(self):
+            self.rdd_calls += 1
+            return self.df.rdd
+
+        def repartition(self, n):
+            return self.df.repartition(n)
+
+    starved = NoStats(spark.range(0, 100, numPartitions=1))
+    out = _fan_out(starved)
+    assert starved.rdd_calls == 1
+    assert out is not starved and out.rdd.getNumPartitions() == target
+    full = NoStats(spark.range(0, 100, numPartitions=target))
+    assert _fan_out(full) is full and full.rdd_calls == 1

@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.row_checks import VIOLATION_SCHEMA
 from .plans.compiler import ValidationPlan, compile_plan
 from .runner import validate
 from .specs import TableSpec
@@ -137,9 +138,7 @@ def global_identity_violations(df: DataFrame, spec: TableSpec,
                                            spec.key_column, spec.part_key,
                                            broadcast_ref=k.broadcast))
     if not parts:
-        return df.sparkSession.createDataFrame(
-            [], "row_key string, part_key bigint, constraint string, "
-                "reason string, value string, occurs bigint")
+        return df.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 

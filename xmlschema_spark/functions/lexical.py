@@ -69,13 +69,3 @@ def union_decode(col: Column, member_types: list[str]) -> Column:
                                             ok.cast("string").alias("value")))
         )
     return F.coalesce(*branches)
-
-
-def union_matches(col: Column, member_types: list[str]) -> Column:
-    """True when at least one union member decodes the value."""
-    casted = col.cast("string")
-    preds = [casted.try_cast(t).isNotNull() for t in member_types]
-    out = preds[0]
-    for p in preds[1:]:
-        out = out | p
-    return out

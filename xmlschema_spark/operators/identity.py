@@ -24,8 +24,6 @@ from pyspark.sql import functions as F
 
 from ..specs import KeyrefSpec, OccursSpec, UniqueSpec
 
-_VIOL = ["row_key", "part_key", "constraint", "reason", "value", "occurs"]
-
 
 def _scope_frame(df: DataFrame, scope: str, keep: list[str]) -> DataFrame:
     """Node set of a record-array-scoped identity (UniqueSpec.scope;

@@ -63,19 +63,9 @@ import zlib
 from typing import Callable, Iterator, Optional
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 from .. import fakecodec
 from ..specs import PayloadSpec
-
-VIOLATION_SCHEMA = T.StructType([
-    T.StructField("row_key", T.StringType()),
-    T.StructField("part_key", T.LongType()),
-    T.StructField("constraint", T.StringType()),
-    T.StructField("reason", T.StringType()),
-    T.StructField("value", T.StringType()),
-    T.StructField("occurs", T.LongType()),
-])
 
 _PA_SCHEMA = None  # built lazily on executors
 
@@ -367,4 +357,7 @@ def payload_violations(
 
             yield pa.RecordBatch.from_pydict(out, schema=_pa_schema())
 
+    # imported here, not at module level: Python workers unpickling
+    # `run` import this module and need none of the compiler
+    from .row_checks import VIOLATION_SCHEMA
     return narrow.mapInArrow(run, schema=VIOLATION_SCHEMA)

@@ -21,7 +21,9 @@ from pyspark.sql import functions as F
 
 from ..plans.compiler import ValidationPlan
 
-VIOLATION_COLUMNS = ["row_key", "part_key", "constraint", "reason", "value", "occurs"]
+# the one violation-row schema every validation branch emits
+VIOLATION_SCHEMA = ("row_key string, part_key bigint, constraint string, "
+                    "reason string, value string, occurs bigint")
 
 _MAX_VALUE_REPR = 200  # truncate offending value like exceptions.py:323-330
 
@@ -44,9 +46,7 @@ def row_violations(df: DataFrame, plan: ValidationPlan) -> DataFrame:
     if not plan.row_checks:
         # identity/assert-only spec: an empty F.array() is array<void>
         # and cannot be exploded into the violation struct
-        return df.sparkSession.createDataFrame(
-            [], "row_key string, part_key bigint, constraint string, "
-                "reason string, value string, occurs bigint")
+        return df.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
     structs = [
         F.when(
             ~F.coalesce(chk.valid, F.lit(False)),

@@ -20,16 +20,18 @@ absence is governed solely by nullable/required
 
 from __future__ import annotations
 
+import operator
 import re
 from dataclasses import dataclass, field
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..functions.lexical import normalize_ws, union_matches
+from ..functions.lexical import normalize_ws
 from ..functions.xsd_regex import translate_xsd_pattern
 from ..specs import ColumnSpec, TableSpec
+from .restriction import _num, flatten_restrictions
 
 # types whose facet comparisons need a numeric/temporal cast of literals
 _NUMERIC = {"tinyint", "smallint", "int", "bigint", "float", "double", "decimal"}
@@ -451,11 +453,6 @@ def _validate_column_spec(cs: ColumnSpec) -> None:
     # bound-order conflicts: only where both bounds are numerically
     # comparable at compile time (temporal/duration bounds live in a
     # partial order and are validated by their own literal parsers)
-    def _num(v):
-        try:
-            return float(v)
-        except (TypeError, ValueError):
-            return None
     lo = cs.min_inclusive if cs.min_inclusive is not None \
         else cs.min_exclusive
     hi = cs.max_inclusive if cs.max_inclusive is not None \
@@ -482,25 +479,44 @@ def _collect_pattern_groups(cs: ColumnSpec) -> list[list[str]]:
     return groups
 
 
+def _all_of(preds) -> Column:
+    out = None
+    for p in preds:
+        out = p if out is None else out & p
+    return F.lit(True) if out is None else out
+
+
+def _any_of(preds) -> Column:
+    out = None
+    for p in preds:
+        out = p if out is None else out | p
+    return out
+
+
 def _pattern_groups_ok(val_s: Column,
                        groups: list[list[str]]) -> Column:
-    ok = None
-    for g in groups:
-        pats = [translate_xsd_pattern(p) for p in g]
-        gok = val_s.rlike(pats[0])
-        for p in pats[1:]:
-            gok = gok | val_s.rlike(p)   # any-of (facets.py:808-814)
-        ok = gok if ok is None else ok & gok
-    return ok
+    # any-of within a group (facets.py:808-814), all groups must match
+    return _all_of(_any_of(val_s.rlike(translate_xsd_pattern(p)) for p in g)
+                   for g in groups)
 
 
-def compile_column(cs: ColumnSpec,
-                   namespaces: Optional[dict] = None
-                   ) -> tuple[Optional[Column], list[RowCheck]]:
-    """Compile one ColumnSpec -> (normalization expr or None, checks).
+# one compiled facet: (kind, reason, ok) — `ok` maps the whitespace-
+# normalized value to its TRUE-when-valid predicate for a PRESENT value
+_Check = tuple[str, str, Callable[[Column], Column]]
+
+
+def _value_checks(cs: ColumnSpec, namespaces: Optional[dict] = None
+                  ) -> tuple[Optional[str], list[_Check]]:
+    """The one facet compiler: one simple-type value -> (whiteSpace
+    mode, ordered checks). Scalar columns (compile_column), list items
+    (compile_item_checks) and union members (the 'union' check below)
+    all compile here, so a facet means the same wherever its type is
+    used. Callers normalize the value with the returned whiteSpace mode
+    and apply every `ok` to it. The type's own lexical space is kind
+    'lexical'; the callers name it.
 
     namespaces: the spec's prefix->URI map (TableSpec.namespaces) —
-    only consulted by xsd:QName / xsd:NOTATION columns for prefix
+    only consulted by xsd:QName / xsd:NOTATION values for prefix
     binding and expanded-name enumeration."""
     _validate_column_spec(cs)
     if cs.dtype == "xsd:NOTATION" and not cs.enum:
@@ -664,7 +680,7 @@ def compile_column(cs: ColumnSpec,
             xsd_lex_pattern = _XSD_LEX[kind]
             xsd_kind = kind
             # the type's lexical check compiles as a SEPARATE
-            # facet:pattern check (appended below), NOT merged into the
+            # check (kind 'lexical', below), NOT merged into the
             # user pattern list: user patterns on one derivation step OR
             # together (facets.py:808-814), but the base TYPE's lexical
             # space is a different step and must AND with them — merging
@@ -689,30 +705,313 @@ def compile_column(cs: ColumnSpec,
                                "whitespace": ws,
                                "min_inclusive": None, "min_exclusive": None,
                                "max_inclusive": None, "max_exclusive": None})
-    checks: list[RowCheck] = []
+    checks: list[_Check] = []
+
+    def s(v: Column) -> Column:
+        return v.cast("string")
+
+    def add(kind: str, reason: str, ok: Callable[[Column], Column],
+            typed_guard: bool = False) -> None:
+        # typed_guard: when the decode step already failed (typed is
+        # null while the raw value is present), value-space facets do
+        # NOT fire — the reference raises the decode error and stops
+        # validating that value (simple_types.py:705-785); only
+        # facet:decode reports it.
+        if typed_guard:
+            checks.append((kind, reason,
+                           lambda v: typed(v).isNull() | ok(v)))
+        else:
+            checks.append((kind, reason, ok))
+
+    # the decoded value that value-space facets compare: the column
+    # itself for string/binary/array/union values, else a try_cast of
+    # the (lexically gated) source
+    decoded = not (cs.union_members or cs.union_of) and bool(cs.dtype) \
+        and cs.dtype not in ("string", "binary") \
+        and not cs.dtype.startswith("array")
+
+    def cast_src(v: Column) -> Column:
+        if xsd_int_decode == "strict_decimal":
+            # the cast only feeds value-space facets: NULL on
+            # out-of-lexicon ('1e2') or >38-digit values
+            return F.when(
+                s(v).rlike(translate_xsd_pattern(_XSD_DECIMAL_LEX)), s(v))
+        if xsd_int_decode == "strict_bool":
+            # lexically-gated cast: an out-of-lexicon spelling Spark
+            # would accept ('TRUE', 'yes') yields NULL typed, so
+            # value-space facets are suppressed like any decode failure
+            return F.when(
+                s(v).rlike(translate_xsd_pattern(r"true|false|1|0")), s(v))
+        if xsd_int_decode == "float":
+            # XSD's INF spellings map to Spark's before the cast
+            return (F.when(s(v).isin("INF", "+INF"), F.lit("Infinity"))
+                    .when(s(v) == "-INF", F.lit("-Infinity"))
+                    .otherwise(s(v)))
+        return v
+
+    def typed(v: Column) -> Column:
+        return cast_src(v).try_cast(cs.dtype) if decoded else v
+
+    if cs.union_members or cs.union_of:
+        # XsdUnion with member facet re-application: valid iff SOME
+        # member decodes AND passes that member's own facets/patterns
+        # (simple_types.py:1180-1207). Each member is one more value
+        # spec on this compiler (bare union_of names are dtype-only
+        # members), its checks ANDed after its own whiteSpace; members
+        # are ORed in declaration order — one codegen expression.
+        if cs.union_members:
+            members = cs.union_members
+            reason = ("value does not match any union member (with "
+                      f"member facets) {[m.dtype for m in members]}")
+        else:
+            members = [ColumnSpec(cs.name, t) for t in cs.union_of]
+            reason = f"value does not match any union member {cs.union_of}"
+        compiled = [_nested_value_checks(m, namespaces, "union member")
+                    for m in members]
+        add("union", reason, lambda v: _any_of(
+            _all_of([ok(normalize_ws(v, mws)) for _, _, ok in mchecks])
+            for mws, mchecks in compiled))
+    elif decoded:
+        # decode step: cast failure = violation with reason "decode"
+        # (reference: decode_error at simple_types.py:726-729).
+        # try_cast is identity when the physical type already matches, so
+        # this is safe for pre-typed parquet columns and a real lexical
+        # parse for string-typed ones. Unbounded integer built-ins
+        # ('skip') and xs:decimal get none: their lexical check is the
+        # complete decode (exact at any digit count; a cast overflow
+        # beyond decimal(38,x) is NOT a decode failure).
+        if xsd_int_decode == "strict":
+            # decimal-backed bounded integer: the cast alone would ROUND
+            # '3.5' instead of rejecting it — AND the lexical form so
+            # every integer kind classifies fractional input the same
+            # way (decode + pattern, like the tinyint-backed kinds)
+            add("decode", f"value is not a valid {cs.dtype}",
+                lambda v: v.try_cast(cs.dtype).isNotNull()
+                & s(v).rlike(translate_xsd_pattern(_XSD_INT_LEX)))
+        elif xsd_int_decode not in ("skip", "strict_decimal"):
+            # native types, xsd:boolean and xsd:float/double (whose cast
+            # covers the whole lexical space once INF is mapped; the
+            # float lexical pattern ANDs in separately)
+            xsd = "xsd:" if xsd_int_decode else ""
+            add("decode", f"value is not a valid {xsd}{cs.dtype}",
+                lambda v: typed(v).isNotNull())
+
+    def bin_ok(v: Column) -> Column:
+        from ..functions.lexical import base64_binary_ok, hex_binary_ok
+        return hex_binary_ok(s(v)) if xsd_binary_kind == "hexBinary" \
+            else base64_binary_ok(s(v))
+
+    if xsd_binary_kind is not None:
+        add("decode", f"value is not a valid xsd:{xsd_binary_kind}", bin_ok)
+
+    _pgroups = _collect_pattern_groups(cs)
+    if _pgroups:
+        reason = (f"value does not match any pattern {cs.pattern}"
+                  if len(_pgroups) == 1 and cs.pattern
+                  else "value does not match every derivation step's "
+                       f"pattern facet {_pgroups}")
+        add("pattern", reason,
+            lambda v: _pattern_groups_ok(s(v), _pgroups))
+
+    if xsd_lex_pattern is not None:
+        # the base type's lexical space ANDs with any user patterns
+        # (separate derivation step — merging would let a user pattern
+        # silently re-admit values outside the type)
+        def lex_ok(v: Column) -> Column:
+            return s(v).rlike(translate_xsd_pattern(xsd_lex_pattern))
+        add("lexical", f"value is not a valid xsd:{xsd_kind}", lex_ok)
+
+    if xsd_kind in ("QName", "NOTATION"):
+        # xs:QName / xs:NOTATION value space (builtins.py:139-152):
+        # beyond the lexical check above, a prefixed value is valid
+        # only when its prefix is bound in the spec's namespace map
+        # (TableSpec.namespaces — rows carry no in-scope xmlns, the
+        # SPEC's bindings are the document's); enumeration compares
+        # EXPANDED names, so 'p:x' equals 'q:x' whenever both prefixes
+        # bind the same URI. Direct xs:NOTATION use is rejected above
+        # like the reference (attributes.py:166-168).
+        nsmap = dict(namespaces or {})
+        bound_keys = sorted(k for k in nsmap if k)
+
+        def pfx_ok(v: Column) -> Column:
+            bound = F.substring_index(s(v), ":", 1).isin(*bound_keys) \
+                if bound_keys else F.lit(False)
+            return ~s(v).contains(":") | bound
+        add("qnamePrefix",
+            "the QName prefix is not bound in the spec's namespace "
+            f"map (bound prefixes: {bound_keys})",
+            lambda v: ~lex_ok(v) | pfx_ok(v))
+        if cs.enum is not None:
+            def _expand_lit(q) -> str:
+                q = " ".join(str(q).split())
+                if ":" in q:
+                    p, loc = q.split(":", 1)
+                    if p not in nsmap:
+                        raise ValueError(
+                            f"prefix {p!r} not found in namespace map")
+                    return "{%s}%s" % (nsmap[p], loc)
+                d = nsmap.get("")
+                return "{%s}%s" % (d, q) if d else q
+            targets = [_expand_lit(v) for v in cs.enum]
+
+            def expanded(v: Column) -> Column:
+                pfx = F.substring_index(s(v), ":", 1)
+                local = F.substring_index(s(v), ":", -1)
+                exp = None
+                for p in bound_keys:
+                    e = F.concat(F.lit("{%s}" % nsmap[p]), local)
+                    exp = F.when(pfx == p, e) if exp is None \
+                        else exp.when(pfx == p, e)
+                unpfx = F.concat(F.lit("{%s}" % nsmap[""]), s(v)) \
+                    if nsmap.get("") else s(v)
+                tail = F.when(~s(v).contains(":"), unpfx) \
+                    .otherwise(F.lit(None))
+                return exp.otherwise(tail) if exp is not None else tail
+            add("enumeration", f"value not in enumeration {cs.enum}",
+                lambda v: ~lex_ok(v) | ~pfx_ok(v)
+                | expanded(v).isin(*targets))
+
+    if cs.enum is not None and xsd_kind not in ("QName", "NOTATION"):
+        if any(isinstance(e, int) and not -2**63 <= e < 2**63
+               for e in cs.enum):
+            # isin boxes literals directly and can't carry >long values
+            # (e.g. unsignedLong's max) — route through _lit casts
+            def enum_ok(v: Column) -> Column:
+                return _any_of(typed(v) == _lit(cs.dtype, e)
+                               for e in cs.enum)
+        else:
+            def enum_ok(v: Column) -> Column:
+                return typed(v).isin(*cs.enum)
+        add("enumeration", f"value not in enumeration {cs.enum}", enum_ok,
+            typed_guard=True)
+
+    def length(v: Column) -> Column:
+        if xsd_binary_kind == "hexBinary":
+            return (F.length(s(v)) / 2).cast("int")
+        if xsd_binary_kind == "base64Binary":
+            b64 = F.regexp_replace(s(v), "\\s", "")
+            pad = F.length(b64) - F.length(F.regexp_replace(b64, "=+$", ""))
+            return ((F.length(b64) / 4).cast("int") * 3 - pad).cast("int")
+        return _length_col(v, cs.dtype)
+
+    def len_ok(op, n: int) -> Callable[[Column], Column]:
+        # binary kinds: a decode failure suppresses length facets (the
+        # reference raises the decode error and stops; an odd-length
+        # hex string has no octet count to measure)
+        if xsd_binary_kind is None:
+            return lambda v: op(length(v), n)
+        return lambda v: ~bin_ok(v) | op(length(v), n)
+
+    for fname, attr, op, sym in (
+            ("length", "length", operator.eq, ""),
+            ("minLength", "min_length", operator.ge, ">= "),
+            ("maxLength", "max_length", operator.le, "<= ")):
+        n = getattr(cs, attr)
+        if n is not None:
+            add(fname, f"length must be {sym}{n}", len_ok(op, n))
+
+    def ordered(op, bound) -> Callable[[Column], Column]:
+        # float/double: NaN is UNORDERED in the XSD value space — Spark
+        # instead sorts NaN greatest, which would wrongly flag NaN on
+        # max* facets. Certain-violation-only rule: NaN passes ordered
+        # facets (mirrors the temporal/duration partial orders).
+        if cs.dtype in ("float", "double"):
+            return lambda v: F.isnan(typed(v)) \
+                | op(typed(v), _lit(cs.dtype, bound))
+        return lambda v: op(typed(v), _lit(cs.dtype, bound))
+
+    for fname, attr, op, sym in (
+            ("minInclusive", "min_inclusive", operator.ge, ">="),
+            ("minExclusive", "min_exclusive", operator.gt, ">"),
+            ("maxInclusive", "max_inclusive", operator.le, "<="),
+            ("maxExclusive", "max_exclusive", operator.lt, "<")):
+        bound = getattr(cs, attr)
+        if bound is not None:
+            add(fname, f"value must be {sym} {bound}", ordered(op, bound),
+                typed_guard=True)
+
+    if cs.total_digits is not None or cs.fraction_digits is not None:
+        # canonical decimal repr: strip sign, trailing fractional zeros,
+        # dangling dot (digit counting semantics of facets.py:451-558 /
+        # count_digits in utils/decoding.py)
+        def canon(v: Column) -> Column:
+            return F.regexp_replace(F.regexp_replace(
+                typed(v).cast("string"), r"(\.\d*?)0+$", "$1"), r"\.$", "")
+        if cs.total_digits is not None:
+            add("totalDigits", f"must have <= {cs.total_digits} total digits",
+                lambda v: F.length(F.regexp_replace(
+                    F.regexp_replace(canon(v), "^[-+]|\\.", ""),
+                    "^0+(?=\\d)", "")) <= cs.total_digits, typed_guard=True)
+        if cs.fraction_digits is not None:
+            add("fractionDigits",
+                f"must have <= {cs.fraction_digits} fraction digits",
+                lambda v: F.coalesce(
+                    F.length(F.regexp_extract(canon(v), "\\.(\\d+)$", 1)),
+                    F.lit(0)) <= cs.fraction_digits, typed_guard=True)
+
+    if cs.fixed is not None:
+        add("fixed", f"value must be fixed to {cs.fixed!r}",
+            lambda v: typed(v) == _lit(cs.dtype, cs.fixed), typed_guard=True)
+
+    if cs.explicit_timezone:
+        # XSD 1.1 explicitTimezone (facets.py:561-603): tz designator on
+        # the LEXICAL form (string-typed temporal columns)
+        tz_pat = r"(Z|[+-]\d{2}:\d{2})$"
+        if cs.explicit_timezone == "required":
+            add("explicitTimezone", "timezone designator required",
+                lambda v: s(v).rlike(tz_pat))
+        elif cs.explicit_timezone == "prohibited":
+            add("explicitTimezone", "timezone designator prohibited",
+                lambda v: ~s(v).rlike(tz_pat))
+        # 'optional' (the XSD default) adds no check; unknown values
+        # were rejected by _validate_column_spec at compile entry
+
+    from ..functions import temporal_order as _TORD
+    for fname, lit_v, kind in xsd_ordered:
+        # decode guard: a value outside the lexical space is reported by
+        # the lexical check only; the ordered facet is suppressed for it
+        # (typed_guard semantics — the reference stops validating a
+        # value after its decode error, simple_types.py:705-785)
+        cmp = _TORD.duration_ordered_valid \
+            if kind in _TORD.DURATION_KINDS else _TORD.temporal_ordered_valid
+        add(fname, f"value must satisfy {fname} {lit_v} (xsd:{kind})",
+            lambda v, f=fname, lv=lit_v, k=kind, c=cmp:
+                ~lex_ok(v) | c(s(v), f, lv, k))
+
+    return cs.whitespace, checks
+
+
+def _nested_value_checks(cs: ColumnSpec, namespaces: Optional[dict],
+                         where: str) -> tuple[Optional[str], list[_Check]]:
+    """_value_checks for a value that is not a column (a list item, a
+    union member). A simple-type assertion's SQL text names the COLUMN
+    (`value` -> `name`), so it cannot be applied to such a value: it
+    is rejected here instead of being silently dropped."""
+    if cs.assertion:
+        raise ValueError(
+            f"{where} '{cs.name}': an assertion cannot apply to a {where} "
+            f"(its SQL expression names the column): {cs.assertion!r}")
+    return _value_checks(cs, namespaces)
+
+
+def compile_column(cs: ColumnSpec,
+                   namespaces: Optional[dict] = None
+                   ) -> tuple[Optional[Column], list[RowCheck]]:
+    """Compile one ColumnSpec -> (normalization expr or None, checks):
+    the facet checks of _value_checks over the normalized column, plus
+    the two checks that name the column — required and assertion."""
+    ws, value_checks = _value_checks(cs, namespaces)
     raw = F.col(cs.name)
-    norm = None
-    col = raw
-    if cs.whitespace and cs.whitespace != "preserve":
-        norm = normalize_ws(raw, cs.whitespace)
-        col = norm
+    norm = normalize_ws(raw, ws) if ws and ws != "preserve" else None
+    col = raw if norm is None else norm
     present = col.isNotNull()
     val_s = col.cast("string")
+    checks: list[RowCheck] = []
 
-    def add(kind: str, reason: str, valid_if_present: Column,
-            typed_guard: Column | None = None) -> None:
-        # typed_guard: when the decode step already failed (typed is null
-        # while the raw value is present), value-space facets do NOT fire —
-        # the reference raises the decode error and stops validating that
-        # value (simple_types.py:705-785); only facet:decode reports it.
-        ok = valid_if_present if typed_guard is None \
-            else typed_guard.isNull() | valid_if_present
-        checks.append(RowCheck(
-            constraint=f"facet:{kind}:{cs.name}",
-            reason=reason,
-            valid=~present | ok,
-            value_col=val_s,
-        ))
+    def add(kind: str, reason: str, ok: Column) -> None:
+        checks.append(RowCheck(constraint=f"facet:{kind}:{cs.name}",
+                               reason=reason, valid=~present | ok,
+                               value_col=val_s))
 
     if not cs.nullable:
         # nested-field column: required only where the parent struct is
@@ -726,248 +1025,14 @@ def compile_column(cs: ColumnSpec,
             valid=req_ok,
             value_col=val_s,
         ))
-
-    if cs.union_members:
-        # XsdUnion with member facet re-application: valid iff SOME member
-        # decodes AND passes that member's own facets/patterns
-        # (simple_types.py:1180-1207). Tried in declaration order; the
-        # whole disjunction is one codegen expression — no data movement.
-        ok = _member_predicate(col, val_s, cs.union_members[0])
-        for m in cs.union_members[1:]:
-            ok = ok | _member_predicate(col, val_s, m)
-        add("union",
-            "value does not match any union member (with member facets) "
-            f"{[m.dtype for m in cs.union_members]}", ok)
-        typed = col
-    elif cs.union_of:
-        # XsdUnion: no member decodes => violation (simple_types.py:1198-1207)
-        add("union", f"value does not match any union member {cs.union_of}",
-            union_matches(col, cs.union_of))
-        typed = col
-    elif cs.dtype and cs.dtype not in ("string", "binary") \
-            and not cs.dtype.startswith("array"):
-        # decode step: cast failure = violation with reason "decode"
-        # (reference: decode_error at simple_types.py:726-729).
-        # try_cast is identity when the physical type already matches, so
-        # this is safe for pre-typed parquet columns and a real lexical
-        # parse for string-typed ones.
-        cast_src = col
-        if xsd_int_decode == "skip":
-            # unbounded integer built-in: the sign-aware lexical pattern
-            # is the complete (and only exact) value-space check; a cast
-            # overflow beyond decimal(38,0) is NOT a decode failure
-            pass
-        elif xsd_int_decode == "strict":
-            # decimal-backed bounded integer: the cast alone would ROUND
-            # '3.5' instead of rejecting it — AND the lexical form so
-            # every integer kind classifies fractional input the same
-            # way (decode + pattern, like the tinyint-backed kinds)
-            add("decode", f"value is not a valid {cs.dtype}",
-                col.try_cast(cs.dtype).isNotNull()
-                & val_s.rlike(translate_xsd_pattern(_XSD_INT_LEX)))
-        elif xsd_int_decode == "strict_decimal":
-            # decode = the lexical space itself (reported by the
-            # appended facet:pattern check, exact at ANY precision);
-            # the cast only feeds value-space facets, NULL on
-            # out-of-lexicon or >38-digit values
-            cast_src = F.when(
-                val_s.rlike(translate_xsd_pattern(_XSD_DECIMAL_LEX)),
-                val_s)
-        elif xsd_int_decode == "strict_bool":
-            # lexically-gated cast: an out-of-lexicon spelling Spark
-            # would accept ('TRUE', 'yes') yields NULL typed, so
-            # value-space facets are suppressed like any decode failure
-            cast_src = F.when(
-                val_s.rlike(translate_xsd_pattern(r"true|false|1|0")),
-                val_s)
-            add("decode", "value is not a valid xsd:boolean",
-                cast_src.try_cast(cs.dtype).isNotNull())
-        elif xsd_int_decode == "float":
-            # xsd:float/double: XSD's INF/NaN spellings map to Spark's
-            # before the cast; the cast then covers the whole lexical
-            # space (the float lexical pattern ANDs in separately)
-            cast_src = (F.when(val_s.isin("INF", "+INF"),
-                               F.lit("Infinity"))
-                        .when(val_s == "-INF", F.lit("-Infinity"))
-                        .otherwise(val_s))
-            add("decode", f"value is not a valid xsd:{cs.dtype}",
-                cast_src.try_cast(cs.dtype).isNotNull())
-        else:
-            add("decode", f"value is not a valid {cs.dtype}",
-                col.try_cast(cs.dtype).isNotNull())
-        typed = cast_src.try_cast(cs.dtype)
-    else:
-        typed = col
-
-    _bin_ok = None
-    if xsd_binary_kind is not None:
-        from ..functions.lexical import base64_binary_ok, hex_binary_ok
-        _bin_ok = hex_binary_ok(val_s) if xsd_binary_kind == "hexBinary" \
-            else base64_binary_ok(val_s)
-        add("decode", f"value is not a valid xsd:{xsd_binary_kind}",
-            _bin_ok)
-
-    _pgroups = _collect_pattern_groups(cs)
-    if _pgroups:
-        reason = (f"value does not match any pattern {cs.pattern}"
-                  if len(_pgroups) == 1 and cs.pattern
-                  else "value does not match every derivation step's "
-                       f"pattern facet {_pgroups}")
-        add("pattern", reason, _pattern_groups_ok(val_s, _pgroups))
-
-    if xsd_lex_pattern is not None:
-        # the base type's lexical space ANDs with any user patterns
-        # (separate derivation step). Named facet:pattern when it is the
-        # only pattern-like check (back-compat), facet:lexical when a
-        # user pattern coexists so constraint ids stay unique.
-        add("pattern" if not _pgroups else "lexical",
-            f"value is not a valid xsd:{xsd_kind}",
-            val_s.rlike(translate_xsd_pattern(xsd_lex_pattern)))
-
-    if xsd_kind in ("QName", "NOTATION"):
-        # xs:QName / xs:NOTATION value space (builtins.py:139-152):
-        # beyond the lexical check above, a prefixed value is valid
-        # only when its prefix is bound in the spec's namespace map
-        # (TableSpec.namespaces — rows carry no in-scope xmlns, the
-        # SPEC's bindings are the document's); enumeration compares
-        # EXPANDED names, so 'p:x' equals 'q:x' whenever both prefixes
-        # bind the same URI. Direct xs:NOTATION use is rejected above
-        # like the reference (attributes.py:166-168).
-        nsmap = dict(namespaces or {})
-        lex_ok = val_s.rlike(translate_xsd_pattern(xsd_lex_pattern))
-        has_pfx = val_s.contains(":")
-        pfx = F.substring_index(val_s, ":", 1)
-        bound_keys = sorted(k for k in nsmap if k)
-        bound = pfx.isin(*bound_keys) if bound_keys else F.lit(False)
-        pfx_ok = ~has_pfx | bound
-        add("qnamePrefix",
-            "the QName prefix is not bound in the spec's namespace "
-            f"map (bound prefixes: {bound_keys})",
-            ~lex_ok | pfx_ok)
-        if cs.enum is not None:
-            def _expand_lit(q) -> str:
-                q = " ".join(str(q).split())
-                if ":" in q:
-                    p, loc = q.split(":", 1)
-                    if p not in nsmap:
-                        raise ValueError(
-                            f"prefix {p!r} not found in namespace map")
-                    return "{%s}%s" % (nsmap[p], loc)
-                d = nsmap.get("")
-                return "{%s}%s" % (d, q) if d else q
-            targets = [_expand_lit(v) for v in cs.enum]
-            local = F.substring_index(val_s, ":", -1)
-            exp = None
-            for p in bound_keys:
-                e = F.concat(F.lit("{%s}" % nsmap[p]), local)
-                exp = F.when(pfx == p, e) if exp is None \
-                    else exp.when(pfx == p, e)
-            unpfx = F.concat(F.lit("{%s}" % nsmap[""]), val_s) \
-                if nsmap.get("") else val_s
-            tail = F.when(~has_pfx, unpfx).otherwise(F.lit(None))
-            exp_col = exp.otherwise(tail) if exp is not None else tail
-            add("enumeration", f"value not in enumeration {cs.enum}",
-                ~lex_ok | ~pfx_ok | exp_col.isin(*targets))
-
-    if cs.enum is not None and xsd_kind not in ("QName", "NOTATION"):
-        if any(isinstance(v, int) and not -2**63 <= v < 2**63
-               for v in cs.enum):
-            # isin boxes literals directly and can't carry >long values
-            # (e.g. unsignedLong's max) — route through _lit casts
-            ok = None
-            for v in cs.enum:
-                eq = typed == _lit(cs.dtype, v)
-                ok = eq if ok is None else ok | eq
-        else:
-            ok = typed.isin(*cs.enum)
-        add("enumeration", f"value not in enumeration {cs.enum}",
-            ok, typed_guard=typed)
-
-    if xsd_binary_kind == "hexBinary":
-        _len = (F.length(val_s) / 2).cast("int")
-    elif xsd_binary_kind == "base64Binary":
-        _b64 = F.regexp_replace(val_s, "\\s", "")
-        _pad = F.length(_b64) - F.length(
-            F.regexp_replace(_b64, "=+$", ""))
-        _len = ((F.length(_b64) / 4).cast("int") * 3 - _pad).cast("int")
-    else:
-        _len = _length_col(col, cs.dtype)
-    def _lenok(cond: Column) -> Column:
-        # binary kinds: a decode failure suppresses length facets (the
-        # reference raises the decode error and stops; an odd-length
-        # hex string has no octet count to measure)
-        return cond if _bin_ok is None else ~_bin_ok | cond
-
-    if cs.length is not None:
-        add("length", f"length must be {cs.length}",
-            _lenok(_len == cs.length))
-    if cs.min_length is not None:
-        add("minLength", f"length must be >= {cs.min_length}",
-            _lenok(_len >= cs.min_length))
-    if cs.max_length is not None:
-        add("maxLength", f"length must be <= {cs.max_length}",
-            _lenok(_len <= cs.max_length))
-
-    def _ord(cmp: Column) -> Column:
-        # float/double: NaN is UNORDERED in the XSD value space — Spark
-        # instead sorts NaN greatest, which would wrongly flag NaN on
-        # max* facets. Certain-violation-only rule: NaN passes ordered
-        # facets (mirrors the temporal/duration partial orders).
-        if cs.dtype in ("float", "double"):
-            return F.isnan(typed) | cmp
-        return cmp
-
-    if cs.min_inclusive is not None:
-        add("minInclusive", f"value must be >= {cs.min_inclusive}",
-            _ord(typed >= _lit(cs.dtype, cs.min_inclusive)),
-            typed_guard=typed)
-    if cs.min_exclusive is not None:
-        add("minExclusive", f"value must be > {cs.min_exclusive}",
-            _ord(typed > _lit(cs.dtype, cs.min_exclusive)),
-            typed_guard=typed)
-    if cs.max_inclusive is not None:
-        add("maxInclusive", f"value must be <= {cs.max_inclusive}",
-            _ord(typed <= _lit(cs.dtype, cs.max_inclusive)),
-            typed_guard=typed)
-    if cs.max_exclusive is not None:
-        add("maxExclusive", f"value must be < {cs.max_exclusive}",
-            _ord(typed < _lit(cs.dtype, cs.max_exclusive)),
-            typed_guard=typed)
-
-    if cs.total_digits is not None or cs.fraction_digits is not None:
-        # canonical decimal repr: strip sign, trailing fractional zeros,
-        # dangling dot (digit counting semantics of facets.py:451-558 /
-        # count_digits in utils/decoding.py)
-        canon = F.regexp_replace(
-            F.regexp_replace(typed.cast("string"), r"(\.\d*?)0+$", "$1"),
-            r"\.$", "")
-        if cs.total_digits is not None:
-            add("totalDigits", f"must have <= {cs.total_digits} total digits",
-                F.length(F.regexp_replace(
-                    F.regexp_replace(canon, "^[-+]|\\.", ""),
-                    "^0+(?=\\d)", "")) <= cs.total_digits, typed_guard=typed)
-        if cs.fraction_digits is not None:
-            add("fractionDigits",
-                f"must have <= {cs.fraction_digits} fraction digits",
-                F.coalesce(F.length(F.regexp_extract(canon, "\\.(\\d+)$", 1)),
-                           F.lit(0)) <= cs.fraction_digits, typed_guard=typed)
-
-    if cs.fixed is not None:
-        add("fixed", f"value must be fixed to {cs.fixed!r}",
-            typed == _lit(cs.dtype, cs.fixed), typed_guard=typed)
-
-    if cs.explicit_timezone:
-        # XSD 1.1 explicitTimezone (facets.py:561-603): tz designator on
-        # the LEXICAL form (string-typed temporal columns)
-        tz_pat = r"(Z|[+-]\d{2}:\d{2})$"
-        has_tz = val_s.rlike(tz_pat)
-        if cs.explicit_timezone == "required":
-            add("explicitTimezone", "timezone designator required", has_tz)
-        elif cs.explicit_timezone == "prohibited":
-            add("explicitTimezone", "timezone designator prohibited", ~has_tz)
-        # 'optional' (the XSD default) adds no check; unknown values
-        # were rejected by _validate_column_spec at compile entry
-
+    # the type's lexical check is named facet:pattern when it is the only
+    # pattern-like check (back-compat), facet:lexical when a user pattern
+    # coexists so constraint ids stay unique
+    user_pattern = any(kind == "pattern" for kind, _, _ in value_checks)
+    for kind, reason, ok in value_checks:
+        if kind == "lexical" and not user_pattern:
+            kind = "pattern"
+        add(kind, reason, ok(col))
     if cs.assertion:
         # simple-type assert with `value` variable (facets.py:836-894).
         # Whole-word substitution only: identifiers like values(...) or
@@ -975,134 +1040,14 @@ def compile_column(cs: ColumnSpec,
         # mirrors binding the $value variable, not textual splicing.
         add("assertion", f"assertion failed: {cs.assertion}",
             F.expr(re.sub(r"\bvalue\b", f"`{cs.name}`", cs.assertion)))
-
-    if xsd_ordered:
-        from ..functions import temporal_order as _TORD
-        # decode guard: a value outside the lexical space is reported by
-        # facet:pattern only; the ordered facet is suppressed for it
-        # (typed_guard semantics — the reference stops validating a
-        # value after its decode error, simple_types.py:705-785)
-        lex_ok = val_s.rlike(translate_xsd_pattern(xsd_lex_pattern))
-        for fname, lit_v, kind in xsd_ordered:
-            if kind in _TORD.DURATION_KINDS:
-                ok = _TORD.duration_ordered_valid(val_s, fname, lit_v, kind)
-            else:
-                ok = _TORD.temporal_ordered_valid(val_s, fname, lit_v, kind)
-            add(fname, f"value must satisfy {fname} {lit_v} (xsd:{kind})",
-                ~lex_ok | ok)
-
     return norm, checks
 
 
-def _member_predicate(col: Column, val_s: Column,
-                      member: ColumnSpec) -> Column:
-    """TRUE when the value decodes as this union member AND satisfies the
-    member's own facets (member facet re-application after union decode,
-    reference: simple_types.py:1180-1196 — pushed patterns/facets are
-    checked against the member that actually decoded the value).
-
-    Patterns apply to the LEXICAL form (the original string), ordered
-    facets to the decoded member value — same split as the reference."""
-    if member.dtype and member.dtype.startswith("xsd:"):
-        return _xsd_member_predicate(col, val_s, member)
-    typed = col.try_cast(member.dtype) if member.dtype != "string" else col
-    ok = typed.isNotNull() if member.dtype != "string" else col.isNotNull()
-    mgroups = _collect_pattern_groups(member)
-    if mgroups:
-        ok = ok & _pattern_groups_ok(val_s, mgroups)
-    if member.enum is not None:
-        ok = ok & typed.isin(*member.enum)
-    if member.min_inclusive is not None:
-        ok = ok & (typed >= _lit(member.dtype, member.min_inclusive))
-    if member.min_exclusive is not None:
-        ok = ok & (typed > _lit(member.dtype, member.min_exclusive))
-    if member.max_inclusive is not None:
-        ok = ok & (typed <= _lit(member.dtype, member.max_inclusive))
-    if member.max_exclusive is not None:
-        ok = ok & (typed < _lit(member.dtype, member.max_exclusive))
-    if member.min_length is not None:
-        ok = ok & (_length_col(col, member.dtype) >= member.min_length)
-    if member.max_length is not None:
-        ok = ok & (_length_col(col, member.dtype) <= member.max_length)
-    return ok
-
-
-def _xsd_member_predicate(col: Column, val_s: Column,
-                          member: ColumnSpec) -> Column:
-    """Union-member predicate for XSD built-in member types — the
-    reference's memberTypes="xs:date xs:dateTime" shape
-    (simple_types.py:1178-1211; tests/validators/
-    test_simple_types.py:227-236): the member matches when the value is
-    in ITS lexical space and satisfies the member's own facets. Ordered
-    facets on temporal members go through the same partial-order
-    machinery as scalar columns."""
-    from ..functions import temporal_order as _TORD
-    from ..functions.temporal_lex import ALL as _XSD_LEX
-    kind = member.dtype[4:]
-    ordered = [("minInclusive", member.min_inclusive),
-               ("minExclusive", member.min_exclusive),
-               ("maxInclusive", member.max_inclusive),
-               ("maxExclusive", member.max_exclusive)]
-    if kind in _XSD_INT_TYPES:
-        phys, lo, hi = _XSD_INT_TYPES[kind]
-        t = val_s.try_cast(phys)
-        ok = val_s.rlike(translate_xsd_pattern(_XSD_INT_LEX)) \
-            & t.isNotNull()
-        if lo is not None:
-            ok = ok & (t >= _lit(phys, lo))
-        if hi is not None:
-            ok = ok & (t <= _lit(phys, hi))
-        for fname, v in ordered:
-            if v is None:
-                continue
-            _check_int_literal(kind, fname, v)
-            op = {"minInclusive": t >= _lit(phys, v),
-                  "minExclusive": t > _lit(phys, v),
-                  "maxInclusive": t <= _lit(phys, v),
-                  "maxExclusive": t < _lit(phys, v)}[fname]
-            ok = ok & op
-        if member.enum is not None:
-            eok = None
-            for e in member.enum:
-                eq = t == _lit(phys, e)
-                eok = eq if eok is None else eok | eq
-            ok = ok & eok
-    elif kind in _XSD_LEX:
-        ok = val_s.rlike(translate_xsd_pattern(_XSD_LEX[kind]))
-        for fname, v in ordered:
-            if v is None:
-                continue
-            if kind in _TORD.DURATION_KINDS:
-                _TORD.parse_duration_literal(str(v), kind)
-                ok = ok & _TORD.duration_ordered_valid(
-                    val_s, fname, str(v), kind)
-            elif kind in _TORD.TEMPORAL_KINDS:
-                _TORD.parse_temporal_literal(str(v), kind)
-                ok = ok & _TORD.temporal_ordered_valid(
-                    val_s, fname, str(v), kind)
-            else:
-                raise ValueError(
-                    f"ordered facet {fname} unsupported for union "
-                    f"member xsd:{kind}")
-        if member.enum is not None:
-            ok = ok & val_s.isin(*[str(e) for e in member.enum])
-    else:
-        raise ValueError(f"unknown xsd union member type "
-                         f"{member.dtype!r}")
-    mgroups = _collect_pattern_groups(member)
-    if mgroups:
-        ok = ok & _pattern_groups_ok(val_s, mgroups)
-    if member.length is not None:
-        ok = ok & (F.length(val_s) == member.length)
-    if member.min_length is not None:
-        ok = ok & (F.length(val_s) >= member.min_length)
-    if member.max_length is not None:
-        ok = ok & (F.length(val_s) <= member.max_length)
-    return ok
-
-
-def compile_item_checks(cs: ColumnSpec) -> list[RowCheck]:
-    """Array-element facets via exists() on the NEGATED element predicate.
+def compile_item_checks(cs: ColumnSpec,
+                        namespaces: Optional[dict] = None
+                        ) -> list[RowCheck]:
+    """Array-element facets: every _value_checks check of the item spec
+    as F.exists() over the NEGATED element predicate.
 
     Built with the Column API (F.exists + Column lambdas) so the whole
     thing stays in codegen WITHOUT interpolating patterns/enums into SQL
@@ -1111,12 +1056,10 @@ def compile_item_checks(cs: ColumnSpec) -> list[RowCheck]:
     against the wrong regex; Column.rlike takes the pattern verbatim.
 
     lexical_list columns (XsdList over a string column,
-    simple_types.py:991-1019) are whitespace-collapsed and split first;
-    items are then try_cast to the item dtype, with a dedicated
-    facet:item:decode check for non-castable members."""
-    item = cs.item
-    if item is not None:
-        _validate_column_spec(item)
+    simple_types.py:991-1019) are whitespace-collapsed and split first.
+    The item type's lexical space is part of its decode: one
+    facet:item:decode check per item."""
+    ws, item_checks = _nested_value_checks(cs.item, namespaces, "list item")
     col = F.col(cs.name)
     if cs.lexical_list:
         trimmed = F.trim(F.regexp_replace(col, r"\s+", " "))
@@ -1132,282 +1075,42 @@ def compile_item_checks(cs: ColumnSpec) -> list[RowCheck]:
         arr = col
         value_col = F.to_json(col)
     present = col.isNotNull()
+    checks: list[RowCheck] = []
 
-    # outer length facets of a lexical list bound the ITEM COUNT (XSD
-    # list-type length semantics, facets.py:171-206) — compile_plan
-    # strips them from the base string column so they land here
-    size_checks: list[RowCheck] = []
+    def add(constraint: str, reason: str, ok: Column) -> None:
+        checks.append(RowCheck(constraint=f"facet:{constraint}:{cs.name}",
+                               reason=reason, valid=~present | ok,
+                               value_col=value_col))
+
     if cs.lexical_list:
-        n_items = F.size(arr)
+        # outer length facets of a lexical list bound the ITEM COUNT (XSD
+        # list-type length semantics, facets.py:171-206) — compile_plan
+        # strips them from the base string column so they land here
+        for fname, attr, op, sym in (
+                ("length", "length", operator.eq, "must be "),
+                ("minLength", "min_length", operator.ge, ">= "),
+                ("maxLength", "max_length", operator.le, "<= ")):
+            n = getattr(cs, attr)
+            if n is not None:
+                add(fname, f"list length {sym}{n}", op(F.size(arr), n))
 
-        def _sz(kindname: str, reason: str, ok) -> None:
-            size_checks.append(RowCheck(
-                constraint=f"facet:{kindname}:{cs.name}",
-                reason=reason, valid=~present | ok, value_col=value_col))
+    def add_item(kind: str, reason: str, oks: list) -> None:
+        bad = F.exists(arr, lambda x: x.isNotNull() & ~_all_of(
+            ok(normalize_ws(x, ws)) for ok in oks))
+        add(f"item:{kind}", f"list item: {reason}", ~bad)
 
-        if cs.length is not None:
-            _sz("length", f"list length must be {cs.length}",
-                n_items == cs.length)
-        if cs.min_length is not None:
-            _sz("minLength", f"list length >= {cs.min_length}",
-                n_items >= cs.min_length)
-        if cs.max_length is not None:
-            _sz("maxLength", f"list length <= {cs.max_length}",
-                n_items <= cs.max_length)
-
-    if item.dtype and item.dtype.startswith("xsd:"):
-        # list/array of XSD temporal items (e.g. xs:list of xs:gYear,
-        # simple_types.py:991-1019 with a temporal item type): each item
-        # is validated against the type's lexical pattern, and ordered
-        # facets compile per element through the same partial-order
-        # machinery as scalar columns (functions/temporal_order.py) —
-        # the lambda builds the comparison fresh per element, so no HOF
-        # re-inline hazard on a shared outer expression.
-        from ..functions import temporal_order as _TORD
-        from ..functions.temporal_lex import ALL as _XSD_LEX
-        kind = item.dtype[4:]
-        int_bounded = kind in _XSD_INT_TYPES
-        int_unbounded = kind in _XSD_INT_UNBOUNDED
-        # non-integer built-ins with pure lexical spaces (scalar path
-        # handles these via strict_* branches; per-item the lexical
-        # check IS the decode)
-        _ITEM_EXTRA_LEX = {"boolean": r"true|false|1|0",
-                           "decimal": _XSD_DECIMAL_LEX,
-                           "float": _XSD_FLOAT_LEX,
-                           "double": _XSD_FLOAT_LEX}
-        if int_bounded:
-            lex = translate_xsd_pattern(_XSD_INT_LEX)
-        elif int_unbounded:
-            lex = translate_xsd_pattern(_XSD_INT_UNBOUNDED[kind])
-        elif kind in _XSD_LEX:
-            lex = translate_xsd_pattern(_XSD_LEX[kind])
-        elif kind in _ITEM_EXTRA_LEX:
-            lex = translate_xsd_pattern(_ITEM_EXTRA_LEX[kind])
-        else:
-            raise ValueError(f"unknown xsd lexical item type {item.dtype!r}")
-        checks: list[RowCheck] = list(size_checks)
-
-        def addx(kind_name: str, reason: str, elem_valid) -> None:
-            bad = F.exists(arr, lambda x: x.isNotNull() & ~elem_valid(x))
-            checks.append(RowCheck(
-                constraint=f"facet:item:{kind_name}:{cs.name}",
-                reason=f"list item: {reason}",
-                valid=~present | ~bad,
-                value_col=value_col,
-            ))
-
-        if int_bounded:
-            # bounded integer item kinds: 'strict' decode = lexical
-            # pattern AND physical-type cast (mirrors the scalar
-            # xsd_int_decode == 'strict' branch) — a regex-only decode
-            # would accept '300' as xsd:byte / '99999' as
-            # xsd:unsignedByte, and every downstream numeric check
-            # passes on the try_cast NULL (reference value-space check:
-            # helpers.py:151-237 rejects out-of-range after decode).
-            _phys_strict = _XSD_INT_TYPES[kind][0]
-
-            def _strict_decode(x, _p=_phys_strict):
-                s = x.cast("string")
-                return s.rlike(lex) & s.try_cast(_p).isNotNull()
-            addx("decode", f"item is not a valid {item.dtype}",
-                 _strict_decode)
-        else:
-            addx("decode", f"item is not a valid {item.dtype}",
-                 lambda x: x.cast("string").rlike(lex))
-        if int_bounded or int_unbounded:
-            # integer item kinds: type bounds (bounded kinds) and user
-            # ordered facets compare numerically per element; overflow/
-            # non-integral casts are suppressed (decode reports them)
-            phys = _XSD_INT_TYPES[kind][0] if int_bounded \
-                else "decimal(38,0)"
-            bounds = []
-            if int_bounded:
-                _, lo, hi = _XSD_INT_TYPES[kind]
-                if item.min_inclusive is None and lo is not None:
-                    bounds.append(("minInclusive", lo,
-                                   lambda a, b: a >= b))
-                if item.max_inclusive is None and hi is not None:
-                    bounds.append(("maxInclusive", hi,
-                                   lambda a, b: a <= b))
-            for fname, lit_v, op in bounds + [
-                    ("minInclusive", item.min_inclusive,
-                     lambda a, b: a >= b),
-                    ("minExclusive", item.min_exclusive,
-                     lambda a, b: a > b),
-                    ("maxInclusive", item.max_inclusive,
-                     lambda a, b: a <= b),
-                    ("maxExclusive", item.max_exclusive,
-                     lambda a, b: a < b)]:
-                if lit_v is None:
-                    continue
-                _check_int_literal(kind, fname, lit_v)
-
-                def int_pred(x, p=phys, v=lit_v, o=op):
-                    xv = x.cast("string").try_cast(p)
-                    return xv.isNull() | o(xv, _lit(p, v))
-                addx(fname, f"item must satisfy {fname} {lit_v} "
-                            f"(xsd:{kind})", int_pred)
-            if item.enum is not None:
-                for e in item.enum:
-                    _check_int_literal(kind, "enum", e)
-
-                def int_enum_pred(x, p=phys):
-                    # VALUE-space comparison ('007' == 7); decode
-                    # failures suppressed (reported by item:decode)
-                    xv = x.cast("string").try_cast(p)
-                    ok = None
-                    for e in item.enum:
-                        eq = xv == _lit(p, e)
-                        ok = eq if ok is None else ok | eq
-                    return xv.isNull() | ok
-                addx("enumeration", f"item must be in {item.enum}",
-                     int_enum_pred)
-            xigroups = _collect_pattern_groups(item)
-            if xigroups:
-                xjg = [[translate_xsd_pattern(p) for p in g]
-                       for g in xigroups]
-
-                def xpat_pred(x):
-                    ok = None
-                    for g in xjg:
-                        gok = x.cast("string").rlike(g[0])
-                        for pp in g[1:]:
-                            gok = gok | x.cast("string").rlike(pp)
-                        ok = gok if ok is None else ok & gok
-                    return ok
-                addx("pattern", f"item must match {xigroups}",
-                     xpat_pred)
-            return checks
-        for fname, lit_v in (("minInclusive", item.min_inclusive),
-                             ("minExclusive", item.min_exclusive),
-                             ("maxInclusive", item.max_inclusive),
-                             ("maxExclusive", item.max_exclusive)):
-            if lit_v is None:
-                continue
-            if kind in _TORD.DURATION_KINDS:
-                _TORD.parse_duration_literal(str(lit_v), kind)
-
-                def ordered_pred(x, f=fname, v=str(lit_v), k=kind):
-                    return ~x.cast("string").rlike(lex) \
-                        | _TORD.duration_ordered_valid(x.cast("string"),
-                                                       f, v, k)
-            elif kind in _TORD.TEMPORAL_KINDS:
-                _TORD.parse_temporal_literal(str(lit_v), kind)
-
-                def ordered_pred(x, f=fname, v=str(lit_v), k=kind):
-                    return ~x.cast("string").rlike(lex) \
-                        | _TORD.temporal_ordered_valid(x.cast("string"),
-                                                       f, v, k)
-            else:
-                raise ValueError(
-                    f"ordered item facet {fname} unsupported for "
-                    f"xsd:{kind}")
-            addx(fname, f"item must satisfy {fname} {lit_v} "
-                        f"(xsd:{kind})", ordered_pred)
-        if item.enum is not None:
-            addx("enumeration", f"item must be in {item.enum}",
-                 lambda x: x.cast("string").isin(
-                     *[str(e) for e in item.enum]))
-        ligroups = _collect_pattern_groups(item)
-        if ligroups:
-            ljg = [[translate_xsd_pattern(p) for p in g]
-                   for g in ligroups]
-
-            def pat_pred(x):
-                ok = None
-                for g in ljg:
-                    gok = x.cast("string").rlike(g[0])
-                    for pp in g[1:]:
-                        gok = gok | x.cast("string").rlike(pp)
-                    ok = gok if ok is None else ok & gok
-                return ok
-            addx("pattern", f"item must match {ligroups}", pat_pred)
-        if item.length is not None:
-            addx("length", f"item length must be {item.length}",
-                 lambda x: F.length(x.cast("string")) == item.length)
-        if item.min_length is not None:
-            addx("minLength", f"item length >= {item.min_length}",
-                 lambda x: F.length(x.cast("string")) >= item.min_length)
-        if item.max_length is not None:
-            addx("maxLength", f"item length <= {item.max_length}",
-                 lambda x: F.length(x.cast("string")) <= item.max_length)
-        return checks
-
-    typed_items = item.dtype not in (None, "string")
-
-    def cast_item(x: Column) -> Column:
-        return x.try_cast(item.dtype) if typed_items else x
-
-    checks: list[RowCheck] = list(size_checks)
-
-    def add(kind: str, reason: str, elem_valid) -> None:
-        bad = F.exists(arr, lambda x: x.isNotNull() & ~elem_valid(x))
-        checks.append(RowCheck(
-            constraint=f"facet:item:{kind}:{cs.name}",
-            reason=f"list item: {reason}",
-            valid=~present | ~bad,
-            value_col=value_col,
-        ))
-
-    if typed_items:
-        add("decode", f"item is not a valid {item.dtype}",
-            lambda x: cast_item(x).isNotNull())
-
-    def ordered(op, bound):
-        lit = _lit(item.dtype, bound)
-        # decode failures are reported by facet:item:decode only — a
-        # null cast must not double-fire the ordered facet (typed_guard
-        # semantics of compile_column, applied per element)
-        def pred(x):
-            xv = cast_item(x)
-            return xv.isNull() | op(xv, lit)
-        return pred
-
-    if item.min_inclusive is not None:
-        add("minInclusive", f"item must be >= {item.min_inclusive}",
-            ordered(lambda a, b: a >= b, item.min_inclusive))
-    if item.max_inclusive is not None:
-        add("maxInclusive", f"item must be <= {item.max_inclusive}",
-            ordered(lambda a, b: a <= b, item.max_inclusive))
-    if item.min_exclusive is not None:
-        add("minExclusive", f"item must be > {item.min_exclusive}",
-            ordered(lambda a, b: a > b, item.min_exclusive))
-    if item.max_exclusive is not None:
-        add("maxExclusive", f"item must be < {item.max_exclusive}",
-            ordered(lambda a, b: a < b, item.max_exclusive))
-    aigroups = _collect_pattern_groups(item)
-    if aigroups:
-        ajg = [[translate_xsd_pattern(p) for p in g] for g in aigroups]
-
-        def pat_pred(x):
-            ok = None
-            for g in ajg:
-                gok = x.rlike(g[0])
-                for p in g[1:]:
-                    gok = gok | x.rlike(p)
-                ok = gok if ok is None else ok & gok
-            return ok
-        add("pattern", f"item must match {aigroups}", pat_pred)
-    if item.enum is not None:
-        enum_vals = list(item.enum)
-
-        def enum_pred(x):
-            xv = cast_item(x)
-            guard = xv.isNull() if typed_items else F.lit(False)
-            return guard | xv.isin(*enum_vals)
-        add("enumeration", f"item must be in {item.enum}", enum_pred)
-    if item.min_length is not None:
-        add("minLength", f"item length >= {item.min_length}",
-            lambda x: F.length(x) >= item.min_length)
-    if item.max_length is not None:
-        add("maxLength", f"item length <= {item.max_length}",
-            lambda x: F.length(x) <= item.max_length)
+    decode = [(r, ok) for k, r, ok in item_checks
+              if k in ("decode", "lexical")]
+    if decode:
+        add_item("decode", decode[0][0], [ok for _, ok in decode])
+    for kind, reason, ok in item_checks:
+        if kind not in ("decode", "lexical"):
+            add_item(kind, reason, [ok])
     return checks
 
 
 def compile_plan(spec: TableSpec) -> ValidationPlan:
     """Compile the whole TableSpec once; reuse across any number of runs."""
-    from .restriction import flatten_restrictions
     # resolve named-simple-type derivation chains first: step validity
     # is checked and the chain flattened, so everything below sees one
     # effective ColumnSpec per column (plans/restriction.py)
@@ -1426,7 +1129,8 @@ def compile_plan(spec: TableSpec) -> ValidationPlan:
             base = ColumnSpec(**base_fields)
             norm, checks = compile_column(
                 base, namespaces=getattr(spec, "namespaces", None))
-            checks.extend(compile_item_checks(cs))
+            checks.extend(compile_item_checks(
+                cs, namespaces=getattr(spec, "namespaces", None)))
         else:
             norm, checks = compile_column(
                 cs, namespaces=getattr(spec, "namespaces", None))

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 from .operators.identity import (keyref_violations, occurs_violations,
                                  unique_violations)
 from .operators.payload import payload_violations
-from .operators.row_checks import canonical_violations, row_violations
+from .operators.row_checks import (VIOLATION_SCHEMA, canonical_violations,
+                                   row_violations)
 from .plans.compiler import ValidationPlan, compile_plan
 from .specs import TableSpec
 
@@ -108,9 +109,7 @@ def schema_violations(df: DataFrame, spec: TableSpec) -> DataFrame:
             rows.append(("<schema>", 0, f"schema:unexpected:{c}",
                          f"undeclared column '{c}' present (no wildcard)", c, 1))
     rows.extend(_attr_wildcard_rows(df, spec, declared))
-    return spark.createDataFrame(
-        rows, "row_key string, part_key bigint, constraint string, "
-              "reason string, value string, occurs bigint")
+    return spark.createDataFrame(rows, VIOLATION_SCHEMA)
 
 
 def _declared_top(spec: TableSpec) -> set:
@@ -504,10 +503,8 @@ def violation_parts(df: DataFrame, plan: ValidationPlan,
     if wc_rows:
         # nested attribute-wildcard verdicts are schema-level (struct
         # fields are static metadata): a tiny local frame, no scan
-        parts.append(df.sparkSession.createDataFrame(
-            wc_rows,
-            "row_key string, part_key bigint, constraint string, "
-            "reason string, value string, occurs bigint"))
+        parts.append(df.sparkSession.createDataFrame(wc_rows,
+                                                     VIOLATION_SCHEMA))
     parts.extend(_required_wildcard_parts(df, spec))
     parts.extend(_recursion_cut_parts(df, spec))
     parts.extend(_record_array_parts(df, plan, spec))
@@ -570,9 +567,7 @@ def validate(df: DataFrame, spec_or_plan: TableSpec | ValidationPlan,
         else compile_plan(spec_or_plan)
     spark = df.sparkSession
     if mode == "skip":
-        empty = spark.createDataFrame(
-            [], "row_key string, part_key bigint, constraint string, "
-                "reason string, value string, occurs bigint")
+        empty = spark.createDataFrame([], VIOLATION_SCHEMA)
         return ValidationResult(empty, verdicts_frame(df, empty, plan.spec))
     if mode == "strict":
         # STAGED fail-fast (reference: raise on first error,
@@ -586,9 +581,7 @@ def validate(df: DataFrame, spec_or_plan: TableSpec | ValidationPlan,
             first = part.limit(1).collect()
             if first:
                 raise XmlSchemaSparkValidationError(first[0].asDict())
-        empty = spark.createDataFrame(
-            [], "row_key string, part_key bigint, constraint string, "
-                "reason string, value string, occurs bigint")
+        empty = spark.createDataFrame([], VIOLATION_SCHEMA)
         return ValidationResult(empty, verdicts_frame(df, empty, plan.spec))
     v = violations_frame(df, plan, refs, extra_validators=extra_validators)
     # persist: the violations DAG (payload decode, identity aggs, joins) is

@@ -43,15 +43,24 @@ class ColumnSpec:
       required     — non-null (attributes.py:224-228); nullable=False alias
       assertion    — XSD 1.1 simple-type assert with `value` variable
                      (facets.py:836-894); a Spark SQL expression string
-      union_of     — ordered member type names; first successful try_cast
-                     wins (XsdUnion, simple_types.py:1178-1211)
+      union_of     — ordered member type names (native Spark or xsd:
+                     built-ins); each compiles as a member spec with only
+                     that dtype (XsdUnion, simple_types.py:1178-1211)
       union_members — ordered member ColumnSpecs: a value is valid iff
                      SOME member decodes AND satisfies that member's own
-                     facets/patterns (member facet re-application after
-                     union decode, simple_types.py:1180-1196). Overrides
-                     union_of when both are set.
-      item         — for array columns: ColumnSpec applied per element
-                     (XsdList, simple_types.py:845,991-1019)
+                     facets/patterns after its own whiteSpace (member
+                     facet re-application after union decode,
+                     simple_types.py:1180-1196). Overrides union_of when
+                     both are set.
+      item         — for array / lexical_list columns: ColumnSpec applied
+                     per element (XsdList, simple_types.py:845,991-1019)
+                     — every facet and type of a scalar column, the
+                     type's lexical check reported as facet:item:decode
+
+      A column, a list item and a union member compile through the same
+      facet compiler, so a facet means the same wherever its type is
+      used. An `assertion` on an item or a union member is rejected at
+      compile_plan: its SQL text names the column, not the item.
       lexical_list — the column is a SPACE-SEPARATED string list: it is
                      whitespace-collapsed and split before item facets
                      apply (XsdList lexical decode,
